@@ -66,7 +66,7 @@ def worker(cores: int, pages: int, avg_out: int, iters: int) -> None:
 
     t0 = time.time()
     compact = os.environ.get("SPARK_GRAFT_SCALING_COMPACT", "1") == "1"
-    adj = build_adj_shards(g, dangling_sink=True, compact=compact)
+    adj = build_adj_shards(g, compact=compact)
     adj.shards.count()
     shard_s = time.time() - t0
 
@@ -74,21 +74,16 @@ def worker(cores: int, pages: int, avg_out: int, iters: int) -> None:
     # marginal cost of (hi - lo) extra supersteps cancels per-call setup jobs
     # (out-weight/vinfo builds, dangling count) so we measure sustained
     # superstep throughput, which is what scales with executors
-    oj = os.environ.get("SPARK_GRAFT_SCALING_ONEJOB")
-    oj = None if oj is None else oj == "1"
     lo, hi = max(1, iters // 3), iters
-    pagerank(g, fixed_iters=1, tol=None, shards=adj, shards_min_edges=0,
-             one_job_supersteps=oj).count()
+    pagerank(g, fixed_iters=1, tol=None, shards=adj, shards_min_edges=0).count()
     reps = int(os.environ.get("SPARK_GRAFT_SCALING_REPS", "4"))
     t_los, t_his = [], []
     for _ in range(reps):
         t0 = time.time()
-        pagerank(g, fixed_iters=lo, tol=None, shards=adj, shards_min_edges=0,
-                 one_job_supersteps=oj).count()
+        pagerank(g, fixed_iters=lo, tol=None, shards=adj, shards_min_edges=0).count()
         t_los.append(time.time() - t0)
         t0 = time.time()
-        pagerank(g, fixed_iters=hi, tol=None, shards=adj, shards_min_edges=0,
-                 one_job_supersteps=oj).count()
+        pagerank(g, fixed_iters=hi, tol=None, shards=adj, shards_min_edges=0).count()
         t_his.append(time.time() - t0)
     # Interference-robust differential: on a shared box, noise (GC storms,
     # other tenants — measured 5x swings between identical runs) only ever

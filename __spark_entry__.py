@@ -538,7 +538,7 @@ def _q_pagerank_uniform_web(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges=g.edges.select("src", "dst", F.lit(1.0).alias("weight")),
         directed=True,
     )
-    adj = build_adj_shards(gu, salt_cap=50, dangling_sink=True, compact=True)
+    adj = build_adj_shards(gu, salt_cap=50, compact=True)
     pr = pagerank(
         gu, damping=0.85, fixed_iters=5, tol=None, shards=adj,
         shards_min_edges=0,
@@ -649,7 +649,7 @@ def _q_pagerank_sharded_web(spark: SparkSession, sf_dir: str) -> DataFrame:
     from graphina_spark.plans.shards import build_adj_shards
 
     g = _web(spark, sf_dir)
-    adj = build_adj_shards(g, salt_cap=50, dangling_sink=True)
+    adj = build_adj_shards(g, salt_cap=50)
     pr = pagerank(
         g, damping=0.85, fixed_iters=5, tol=None, shards=adj,
         shards_min_edges=0,

@@ -327,6 +327,10 @@ def encode_png(img: np.ndarray, filter_cycle: bool = True) -> bytes:
 
 def _lzw_decode(data: bytes, min_code_size: int, max_pixels: int) -> list[int]:
     """GIF-flavor LZW (variable width, clear/EOI codes, LSB-first bits)."""
+    if not 2 <= min_code_size <= 8:
+        # the code table starts with 2**min_code_size entries: an
+        # unchecked header byte (up to 255) asks for an unbounded table
+        raise ValueError(f"GIF LZW minimum code size {min_code_size} not in 2..8")
     clear, eoi = 1 << min_code_size, (1 << min_code_size) + 1
     out: list[int] = []
     table: list[list[int]] = [[i] for i in range(clear)] + [[], []]

@@ -15,29 +15,30 @@ variant (personalized_pagerank.rs:24-120).  Pinned conventions:
 
 Spark execution model (per superstep):
 
-- ``edges_norm(src, dst, w_norm)`` is precomputed once, hash-partitioned by
-  ``src`` and cached — the join with the rank vector reuses that partitioning
-  so only the (much smaller) rank frame shuffles;
-- gather = ``groupBy(dst).sum`` benefits from partial (map-side) aggregation,
-  so hub vertices receive pre-combined messages, not one row per in-edge;
+- the gather runs over PageRank's scatter edges
+  (:func:`graphina_spark.plans.shards.scatter_edges`): the plain per-edge
+  frame ``(src, dst, w_norm)`` hash-partitioned by ``src`` and cached, or
+  the salted CSR adjacency shards built from the same rows
+  (:mod:`graphina_spark.plans.shards`, same semantics, skew-proof — the
+  scale path).  Gather = join with the rank vector + ``groupBy(dst).sum``,
+  which benefits from partial (map-side) aggregation, so hub vertices
+  receive pre-combined messages, not one row per in-edge;
 - dangling mass rides the SAME message shuffle as the gather: every dangling
-  vertex gets one virtual edge to the sink id ``-1`` with weight 1, so
-  ``Σ_{dangling} pr[u]`` pops out as the sink's aggregation group — no
+  vertex has one virtual edge to the reserved sink id ``-1`` with weight 1,
+  so ``Σ_{dangling} pr[u]`` pops out as the sink's aggregation group — no
   per-superstep semi-join of the rank vector against a dangling-id set (at
   10^12 vertices that join rebuilds a 10^11-row hash table every
-  iteration).  The 1-row sink group is broadcast back into the update
-  expression; the gathered frame is cached for the superstep since it is
-  read twice (sink extraction + vertex join).  Vertex id ``-1`` is reserved;
+  iteration).  When the graph has dangling vertices the gathered frame is
+  cached for the superstep and one ``first()`` pulls the sink group to the
+  driver; it enters the update as a literal.  That ``first()`` is the
+  superstep's action; the vertex join then reads the cache;
 - the L1 delta (when ``tol`` is active) is a single-scalar driver aggregate;
 - every superstep the rank frame is materialized (parquet checkpoint with
   manifest when a :class:`CheckpointManager` is given, else a
   partitioning-preserving ``localCheckpoint``) so the plan never grows and
-  the next gather join is exchange-free (see plans/materialize.py).
-
-At 100 TB scale the plain join is replaced by the salted CSR adjacency-shard
-gather in :mod:`graphina_spark.plans.shards` (same semantics, skew-proof);
-this module is the semantic reference implementation and the small/medium
-path.
+  the next gather join is exchange-free (see plans/materialize.py).  With
+  neither a checkpoint nor ``tol`` the ``localCheckpoint`` is lazy and runs
+  inside the next superstep's ``first()``: one job per superstep.
 """
 
 from __future__ import annotations
@@ -48,6 +49,7 @@ from pyspark.sql import functions as F
 from graphina_spark.graph import LinkGraph
 from graphina_spark.plans.materialize import local_materialize as _mat
 from graphina_spark.plans.checkpoint import CheckpointManager
+from graphina_spark.plans.shards import SINK_ID, AdjShards, out_weights, scatter_edges
 
 # Symmetrized-edge count below which pagerank(shards=...) falls back to the
 # plain per-edge join (measured crossover region: shards lose at 57k edges,
@@ -65,10 +67,9 @@ def pagerank(
     fixed_iters: int | None = None,
     checkpoint: CheckpointManager | None = None,
     resume: bool = False,
-    shards: "AdjShards | None" = None,
+    shards: AdjShards | None = None,
     shards_min_edges: int | None = None,
     stats: dict | None = None,
-    one_job_supersteps: bool | None = None,
 ) -> DataFrame:
     """Return ``(id: long, rank: double)``, Σ rank = 1.
 
@@ -108,64 +109,25 @@ def pagerank(
             if n_edges < threshold:
                 shards = None
 
+    edges_norm = None
     if shards is not None:
-        # salted CSR adjacency path (plans/shards.py): the join moves one row
-        # per (src, salt) instead of one per edge, and hub scatter is spread
-        # across salt rows — the 100 TB layout.  Shards built with
-        # dangling_sink=True already carry the virtual sink edges.
-        wout = shards.wout.select("src", "w_out")
-        edges_norm = None
-        sink_in_gather = shards.dangling_sink
+        wout = shards.wout
     else:
-        sym = g.symmetric_edges()
-        wout = sym.groupBy("src").agg(F.sum("weight").alias("w_out"))
-        # virtual sink edges: one (u, -1, 1.0) row per dangling vertex, so the
-        # dangling mass is just one more aggregation group in the gather
-        sink_edges = (
-            g.vertices.select(F.col("id").alias("src"))
-            .join(wout.select("src"), "src", "left_anti")
-            .select(
-                "src",
-                F.lit(-1).cast("long").alias("dst"),
-                F.lit(1.0).alias("w_norm"),
-            )
-        )
-        edges_norm = (
-            sym.join(wout, "src")
-            .select("src", "dst", (F.col("weight") / F.col("w_out")).alias("w_norm"))
-            .unionByName(sink_edges)
-            .repartition("src")
-            .cache()
-        )
-        sink_in_gather = True
+        wout = out_weights(g)
+        edges_norm = scatter_edges(g, wout).repartition("src").cache()
+    # wout holds one row per vertex with an out-edge; the rest are dangling
+    has_dangling = wout.count() < n
 
     # teleport vector p: personalization L1-normalized (uniform fallback when
     # Σ<=0, personalized_pagerank.rs:51-63) else uniform 1/n
+    base = g.vertices.select("id")
+    pcol = F.lit(1.0 / n)
     if personalization is not None:
         psum = personalization.agg(F.sum("p")).first()[0] or 0.0
-        if psum <= 0:
-            pcol = F.lit(1.0 / n)
-            personalization = None
-        else:
+        if psum > 0:
+            base = base.join(personalization, "id", "left")
             pcol = F.coalesce(F.col("p") / F.lit(psum), F.lit(0.0))
-    else:
-        pcol = F.lit(1.0 / n)
-
-    base = g.vertices.select("id")
-    if personalization is not None:
-        base = base.join(personalization, "id", "left")
-    vinfo = (
-        base.join(wout.select(F.col("src").alias("id"), "w_out"), "id", "left")
-        .select(
-            "id",
-            (F.coalesce("w_out", F.lit(0.0)) == 0.0).alias("dangling"),
-            pcol.alias("p"),
-        )
-        .repartition("id")
-        .cache()
-    )
-
-    has_dangling = vinfo.where("dangling").limit(1).count() > 0
+    vinfo = base.select("id", pcol.alias("p")).repartition("id").cache()
 
     start_iter = 0
     ranks = None
@@ -188,23 +150,11 @@ def pagerank(
 
     d = damping
     check_tol = tol is not None and fixed_iters is None
-    # One-job supersteps (the default fixed-iteration shape): the dangling
-    # scalar is pulled to the driver by the SAME action that executes the
-    # gather (a 1-row first() — no separate broadcast-build job), and the
-    # per-superstep checkpoint is LAZY, so it materializes inside the next
-    # superstep's action instead of its own job.  Halves scheduled jobs per
-    # superstep; the arithmetic is bit-identical (the scalar is the same
-    # double either way).  Requires the rank frame to be single-use per
-    # superstep: true on the sink-edge dangling path (and when there are no
-    # dangling vertices), NOT on the semi-join fallback (ranks read twice)
-    # or when a delta/convergence join re-reads ranks.
-    one_job = (
-        checkpoint is None
-        and not check_tol
-        and (not has_dangling or sink_in_gather)
-        if one_job_supersteps is None
-        else one_job_supersteps
-    )
+    # One-job supersteps: with neither a checkpoint nor a delta join to
+    # re-read the rank frame, each rank frame is read once (by the next
+    # gather), so its localCheckpoint can stay LAZY and run inside the next
+    # superstep's sink first() instead of as its own job.
+    one_job = checkpoint is None and not check_tol
     prev_gathered = None
     for it in range(start_iter, n_iters):
         if shards is not None:
@@ -220,46 +170,23 @@ def pagerank(
                 .groupBy("id")
                 .agg(F.sum("c").alias("gather"))
             )
-        gathered_cached = None
-        dang_lit = None
-        if has_dangling and sink_in_gather:
-            # dangling mass came down the same shuffle as every other message:
-            # the sink group is one aggregation row.  gathered is read twice
-            # (sink row + vertex join), so cache it for the step.
+        dang_col = F.lit(0.0)
+        if has_dangling:
+            # THE superstep action: runs the gather (and, on the one-job
+            # path, the previous superstep's deferred checkpoint), fills the
+            # cache the vertex join below reads, and returns the sink group
             gathered = gathered.cache()
-            gathered_cached = gathered
-            if one_job:
-                # THE superstep action: runs the gather (and the previous
-                # iteration's deferred checkpoint), fills the cache, and
-                # returns the sink scalar to the driver
-                dang_lit = (
-                    gathered.where(F.col("id") == -1)
-                    .agg(F.coalesce(F.sum("gather"), F.lit(0.0)))
-                    .first()[0]
-                )
-                if prev_gathered is not None:
-                    prev_gathered.unpersist()
-            else:
-                dang_df = gathered.where(F.col("id") == -1).agg(
-                    F.coalesce(F.sum("gather"), F.lit(0.0)).alias("dang")
-                )
-        elif has_dangling:
-            # shards built without dangling_sink: per-superstep semi-join
-            # against the dangling-id set (the pre-sink fallback shape)
-            dang_df = (
-                ranks.join(vinfo.where("dangling").select("id"), "id", "left_semi")
-                .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dang"))
+            dang = (
+                gathered.where(F.col("id") == SINK_ID)
+                .agg(F.coalesce(F.sum("gather"), F.lit(0.0)))
+                .first()[0]
             )
-        # the -1 sink row drops out of the left join below (vinfo has no -1)
-        joined = vinfo.join(gathered, "id", "left")
-        if has_dangling and dang_lit is not None:
-            dang_col = F.lit(d) * F.lit(float(dang_lit)) * F.col("p")
-        elif has_dangling:
-            joined = joined.crossJoin(F.broadcast(dang_df))
-            dang_col = F.lit(d) * F.col("dang") * F.col("p")
-        else:
-            dang_col = F.lit(0.0)
-        new_ranks = joined.select(
+            dang_col = F.lit(d) * F.lit(float(dang)) * F.col("p")
+            if prev_gathered is not None:
+                prev_gathered.unpersist()
+                prev_gathered = None
+        # the sink row drops out of the left join below (vinfo has no -1)
+        new_ranks = vinfo.join(gathered, "id", "left").select(
             "id",
             (
                 (1.0 - d) * F.col("p")
@@ -268,12 +195,10 @@ def pagerank(
             ).alias("rank"),
         )
 
-        # Materialize every superstep: eager when the rank frame is
-        # referenced twice next iteration (dangling semi-join or delta
-        # check — a lazy chain would recompute the history ~2^k times);
-        # LAZY on the one-job path, where the next superstep's first()
-        # action materializes it.  Either way lineage truncates and plan
-        # depth stays O(1) across iterations.
+        # Materialize every superstep: eager when the delta check re-reads
+        # the rank frame (a lazy chain would recompute the history ~2^k
+        # times), LAZY on the one-job path.  Either way lineage truncates
+        # and plan depth stays O(1) across iterations.
         delta = None
         if checkpoint is not None:
             if check_tol:
@@ -298,15 +223,14 @@ def pagerank(
                     .first()[0]
                 )
 
-        if one_job:
-            # gathered cache is still needed by the deferred checkpoint;
-            # unpersist it when the NEXT superstep's action has run
-            prev_gathered = gathered_cached
-        elif gathered_cached is not None:
-            gathered_cached.unpersist()
+        if has_dangling:
+            if one_job:
+                # the deferred checkpoint still reads the cache; it is
+                # dropped once the NEXT superstep's action has run
+                prev_gathered = gathered
+            else:
+                gathered.unpersist()
         ranks.unpersist()
-        if it == n_iters - 1 and edges_norm is not None:
-            edges_norm.unpersist()
         ranks = new_ranks
         if stats is not None:
             stats["iterations"] = it + 1
@@ -314,10 +238,12 @@ def pagerank(
         if delta is not None and delta < tol:
             break
 
-    if one_job and prev_gathered is not None:
-        # force the final deferred checkpoint, then drop the last cache
+    if one_job:
+        # run the last deferred checkpoint before dropping the caches it reads
         ranks.count()
-        prev_gathered.unpersist()
+    for df in (prev_gathered, edges_norm, vinfo):
+        if df is not None:
+            df.unpersist()
     return ranks.select("id", "rank")
 
 

@@ -19,11 +19,12 @@ seeds), which is what makes T topics over a 10^11-vertex graph feasible
 when seed sets are small.  Zero-mass (topic, vertex) rows are never
 materialized, never shuffled.
 
-Dangling mass uses the same virtual-sink trick as operators/pagerank.py:
-every out-degree-0 vertex gets one (u, -1, 1.0) edge, so the per-topic
-dangling total is just one more group in the gather aggregation — no
-separate anti-join pass per superstep.  The sink total redistributes to
-the topic's own seeds (∝ p_t), preserving sparsity.
+Dangling mass uses the same virtual-sink edges as operators/pagerank.py
+(plans/shards.py::scatter_edges): every out-degree-0 vertex has one
+(u, -1, 1.0) edge, so the per-topic dangling total is just one more group
+in the gather aggregation — no separate anti-join pass per superstep.  The
+sink total redistributes to the topic's own seeds (∝ p_t), preserving
+sparsity.
 
 DuckDB twin: oracles.py::topic_pagerank_web_sql (dense unrolled SQL
 filtered to pr > 0 at the end — identical support because a sparse row
@@ -38,6 +39,7 @@ from pyspark.sql import functions as F
 
 from graphina_spark.graph import LinkGraph
 from graphina_spark.plans.materialize import local_materialize as _mat
+from graphina_spark.plans.shards import SINK_ID, scatter_edges
 
 
 def topic_sensitive_pagerank(
@@ -72,21 +74,7 @@ def topic_sensitive_pagerank(
     )
 
     # normalized out-edges + one virtual sink edge per dangling vertex
-    # (same construction as operators/pagerank.py)
-    sym = g.symmetric_edges()
-    wout = sym.groupBy("src").agg(F.sum("weight").alias("w_out"))
-    sink_edges = (
-        g.vertices.select(F.col("id").alias("src"))
-        .join(wout.select("src"), "src", "left_anti")
-        .select("src", F.lit(-1).cast("long").alias("dst"), F.lit(1.0).alias("w_norm"))
-    )
-    en = (
-        sym.join(wout, "src")
-        .select("src", "dst", (F.col("weight") / F.col("w_out")).alias("w_norm"))
-        .unionByName(sink_edges)
-        .repartition("src")
-        .cache()
-    )
+    en = scatter_edges(g).repartition("src").cache()
 
     ranks = pvec.select("topic", "id", F.col("p").alias("pr"))
     for _ in range(fixed_iters):
@@ -97,10 +85,10 @@ def topic_sensitive_pagerank(
             .agg(F.sum("m").alias("gather"))
         )
         dang = (
-            agg.where(F.col("id") == -1)
+            agg.where(F.col("id") == SINK_ID)
             .select("topic", F.col("gather").alias("dang"))
         )
-        gather = agg.where(F.col("id") != -1)
+        gather = agg.where(F.col("id") != SINK_ID)
         ranks = (
             pvec.join(gather, ["topic", "id"], "full_outer")
             .join(F.broadcast(dang), "topic", "left")

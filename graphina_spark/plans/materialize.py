@@ -71,12 +71,12 @@ def local_materialize(df: DataFrame, eager: bool = True) -> DataFrame:
 
     ``eager=False`` defers the checkpoint's execution to the first action
     that reads it — in a superstep loop whose NEXT iteration starts with its
-    own small job (e.g. the dangling-mass broadcast build), the deferred
-    checkpoint rides inside that job, cutting scheduled jobs per superstep
-    from two to one.  Correct ONLY when the frame is consumed exactly once
-    before the next checkpoint (a doubly-referenced lazy frame would
-    recompute); the PageRank sink-edge path satisfies this — ranks feed one
-    gather join per superstep.
+    own action (PageRank's ``first()`` of the dangling sink group), the
+    deferred checkpoint rides inside that job, cutting scheduled jobs per
+    superstep from two to one.  Correct ONLY when the frame is consumed
+    exactly once before the next checkpoint (a doubly-referenced lazy frame
+    would recompute); PageRank without a checkpoint or ``tol`` satisfies
+    this — ranks feed one gather join per superstep.
 
     AQE is disabled around the checkpoint: physical planning happens inside
     ``localCheckpoint(eager=True)``, and under AQE the leaf comes back as

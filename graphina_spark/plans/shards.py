@@ -1,7 +1,17 @@
-"""Salted, src-bucketed CSR-style adjacency shards — the scale layout.
+"""Salted, src-keyed CSR-style adjacency shards — the scale layout — and
+the one owner of PageRank's scatter edges.
 
-North-star storage: ``adj(bucket, salt, src, dst_list: array<long>,
-w_list: array<double>, degree: long)``.  The reference's analogue is the
+Scatter edges: every symmetrized edge ``(u, v)`` carries ``w_norm =
+w(u,v)/w_out(u)``, and every dangling vertex ``u`` (no out-edge) carries one
+virtual edge ``(u, -1, 1.0)``.  A PageRank gather over these rows produces
+the total dangling mass ``Σ_{w_out=0} pr[u]`` as the aggregation group of
+the reserved sink id ``-1``, inside the normal message shuffle.
+:func:`scatter_edges` returns them as plain rows (the per-edge PageRank and
+topic-rank paths); :func:`build_adj_shards` groups the same rows into
+shards.
+
+Shard storage: ``adj(salt, src, dst_list: array<long>[, w_list:
+array<double>], degree: long)``.  The reference's analogue is the
 position-space CSR snapshot it builds before every hot loop
 (/root/reference/src/core/paths.rs:767-801, sprs CsMat round-trip at
 types.rs:570-606); ours is a distributed DataFrame with two extra design
@@ -34,29 +44,78 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from graphina_spark.graph import LinkGraph
 
 DEFAULT_SALT_CAP = 100_000
+#: reserved vertex id: the target of every dangling vertex's virtual edge
+SINK_ID = -1
+
+
+def out_weights(g: LinkGraph) -> DataFrame:
+    """``(src, w_out, degree, w_min, w_max)`` per vertex with at least one
+    symmetrized out-edge.  The weight extrema ride along on the same edge
+    pass so :func:`build_adj_shards` can detect constant weights without a
+    second scan."""
+    return g.symmetric_edges().groupBy("src").agg(
+        F.sum("weight").alias("w_out"),
+        F.count("*").alias("degree"),
+        F.min("weight").alias("w_min"),
+        F.max("weight").alias("w_max"),
+    )
+
+
+def _normalized_edges(g: LinkGraph, wout: DataFrame) -> DataFrame:
+    """``(src, dst, weight, w_norm, degree)`` for every symmetrized edge."""
+    return g.symmetric_edges().join(wout, "src").select(
+        "src",
+        "dst",
+        "weight",
+        (F.col("weight") / F.col("w_out")).alias("w_norm"),
+        "degree",
+    )
+
+
+def _sink_edges(g: LinkGraph, wout: DataFrame) -> DataFrame:
+    """``(src, dst, w_norm)``: one ``(u, SINK_ID, 1.0)`` row per vertex
+    absent from ``wout``."""
+    return (
+        g.vertices.select(F.col("id").alias("src"))
+        .join(wout.select("src"), "src", "left_anti")
+        .select(
+            "src",
+            F.lit(SINK_ID).cast("long").alias("dst"),
+            F.lit(1.0).alias("w_norm"),
+        )
+    )
+
+
+def scatter_edges(g: LinkGraph, wout: DataFrame | None = None) -> DataFrame:
+    """``(src, dst, w_norm)``: the normalized symmetrized edges plus one sink
+    row per dangling vertex (see the module docstring).  ``wout`` is
+    :func:`out_weights` of ``g``, passed when the caller already holds it."""
+    if wout is None:
+        wout = out_weights(g)
+    return (
+        _normalized_edges(g, wout)
+        .select("src", "dst", "w_norm")
+        .unionByName(_sink_edges(g, wout))
+    )
 
 
 @dataclass
 class AdjShards:
     """Materialized adjacency shards + the hub-salt replication map."""
 
-    shards: DataFrame  # (bucket, salt, src, dst_list, w_list, degree, w_out)
+    shards: DataFrame  # (src, salt, dst_list[, w_list], degree); a dangling
+    # vertex holds one sink row (salt 0, dst_list [-1], w_list [1.0], degree 0)
     salt_map: DataFrame  # (src, n_salt) — hubs only (n_salt > 1); broadcast side
-    wout: DataFrame  # (src, w_out, degree[, _wlo, _whi]) — scatter-active
-    # vertices; the underscore cols exist only when the builder auto-
-    # detected uniform weights (they rode along on the wout aggregation)
+    wout: DataFrame  # out_weights(g) — scatter-active vertices only
     salt_cap: int
-    dangling_sink: bool = False  # True: dangling vertices carry one virtual
-    # edge to id -1 w=1.0, so Σ dangling rank rides the gather shuffle as the
-    # sink's aggregation group (PageRank's dangling mass, no extra rank pass)
     uniform: bool = False  # True: w_list is NOT stored — every edge of a
-    # src carries w_norm = 1/degree (unweighted graphs under normalize=True).
+    # src carries w_norm = 1/degree (auto-detected constant edge weights).
     # Cuts per-superstep adjacency scan traffic to 4 B/edge with compact=True
     # (vs 12 weighted-compact / 16 plain) — the memory-bus term that caps
     # single-box scaling; Common-Crawl link graphs are exactly this shape.
@@ -70,7 +129,8 @@ class AdjShards:
 
     def gather(self, ranks: DataFrame, value: str = "rank") -> DataFrame:
         """One superstep's message wave: Σ_{u→v} value[u]·w_norm(u,v) → (id,
-        gather).  ``ranks`` is (id, <value>)."""
+        gather); the dangling total lands in the ``SINK_ID`` group.
+        ``ranks`` is (id, <value>)."""
         replicated = (
             ranks.join(F.broadcast(self.salt_map), ranks["id"] == self.salt_map["src"], "left")
             .select(
@@ -120,31 +180,19 @@ class AdjShards:
 def build_adj_shards(
     g: LinkGraph,
     salt_cap: int = DEFAULT_SALT_CAP,
-    n_buckets: int | None = None,
-    normalize: bool = True,
-    dangling_sink: bool = False,
+    dangling_sink: bool = True,
     compact: bool = False,
-    uniform: bool | None = None,
 ) -> AdjShards:
-    """Group the (symmetrized) edge set into capped, salted CSR rows.
+    """Group the scatter edges of ``g`` (:func:`scatter_edges`) into capped,
+    salted CSR rows; each dangling vertex ``u`` gets the sink row
+    ``(src=u, salt=0, dst_list=[-1], w_list=[1.0], degree=0)``.
 
-    ``normalize=True`` stores w_list as w(u,v)/w_out(u) (the PageRank scatter
-    weights); ``False`` stores raw weights (matvec kernels: eigenvector/Katz).
+    Sink rows are unconditional; ``dangling_sink`` must be True and is kept
+    only for existing callers that pass it.
 
-    ``dangling_sink=True`` additionally emits one shard row per dangling
-    vertex (no out-edges): ``(src=u, salt=0, dst_list=[-1], w_list=[1.0])``.
-    A PageRank gather then produces the total dangling mass as the sink id's
-    aggregation group inside the normal message shuffle, replacing the
-    per-superstep second scan of the rank vector.  ``wout`` is NOT given sink
-    rows — dangling vertices keep w_out absent, so vinfo dangling flags stay
-    correct.
-
-    ``uniform`` — True: weights are known constant, store no w_list and
-    gather with 1/degree; False: always store w_list (skips auto-detect
-    entirely — pass this when weights are known non-constant); None
-    (default): auto-detect constant weights via per-src extrema folded
-    into the wout aggregation (no extra edge scan; one tiny reduce over
-    the per-src frame).
+    Constant edge weights are auto-detected from the ``wout`` extrema (one
+    tiny reduce over the per-src frame): then w_norm is exactly
+    1/degree, no w_list is stored, and the gather computes it inline.
 
     ``compact=True`` stores ``dst_list`` as array<int> and ``w_list`` as
     array<float> — 12 bytes/edge of superstep scan traffic instead of 16 at
@@ -158,58 +206,15 @@ def build_adj_shards(
     8e-7 < the north rule's allclose 1e-6 (tests pin agreement ≤ 1e-6
     against the float64 kernel).
     """
-    spark = g.edges.sparkSession
-    if n_buckets is None:
-        n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    sym = g.symmetric_edges()
-    if uniform and not normalize:
+    if not dangling_sink:
         raise ValueError(
-            "uniform shards require normalize=True (w_norm = 1/degree)"
+            "build_adj_shards always emits dangling sink rows; "
+            "dangling_sink=False is not supported"
         )
-    detect = uniform is None and normalize
-    wout_aggs = [
-        F.sum("weight").alias("w_out"),
-        F.count("*").alias("degree"),
-    ]
-    if detect:
-        # per-src weight extrema piggyback on the wout aggregation, so the
-        # constant-weight auto-detect folds into the edge pass that
-        # materializes the wout cache anyway — no extra scan of sym
-        # (callers that know their weights can skip even the small
-        # global reduce below by passing uniform=True/False explicitly)
-        wout_aggs += [
-            F.min("weight").alias("_wlo"),
-            F.max("weight").alias("_whi"),
-        ]
-    wout = sym.groupBy("src").agg(*wout_aggs).cache()
-    if uniform is None:
-        # auto-detect: constant edge weight + normalize => w_norm is
-        # exactly 1/degree, so w_list need not be stored or scanned
-        if detect:
-            mm = wout.agg(
-                F.min("_wlo").alias("lo"), F.max("_whi").alias("hi")
-            ).first()
-            uniform = mm["lo"] is not None and mm["lo"] == mm["hi"]
-        else:
-            uniform = False
-    from pyspark.sql import Window
-
-    rn = F.row_number().over(Window.partitionBy("src").orderBy("dst", "weight"))
-    e = (
-        sym.join(wout, "src")
-        .select(
-            "src",
-            "dst",
-            "weight",
-            (
-                (F.col("weight") / F.col("w_out")) if normalize else F.col("weight")
-            ).alias("w_norm"),
-            "degree",
-            "w_out",
-        )
-        .withColumn("salt", ((rn - 1) / F.lit(salt_cap)).cast("int"))
-        .drop("weight")
-    )
+    spark = g.edges.sparkSession
+    wout = out_weights(g).cache()
+    mm = wout.agg(F.min("w_min").alias("lo"), F.max("w_max").alias("hi")).first()
+    uniform = mm["lo"] is not None and mm["lo"] == mm["hi"]
     dst_t, w_t = ("int", "float") if compact else ("bigint", "double")
     if compact:
         over = g.vertices.where(
@@ -220,37 +225,30 @@ def build_adj_shards(
                 "build_adj_shards(compact=True) requires vertex ids in "
                 "[0, 2^31); use compact=False for wider id spaces"
             )
-    aggs = [
-        F.collect_list(F.col("dst").cast(dst_t)).alias("dst_list"),
-        F.first("degree").alias("degree"),
-        F.first("w_out").alias("w_out"),
+    rn = F.row_number().over(Window.partitionBy("src").orderBy("dst", "weight"))
+    e = (
+        _normalized_edges(g, wout)
+        .withColumn("salt", ((rn - 1) / F.lit(salt_cap)).cast("int"))
+        .drop("weight")
+    )
+    aggs = [F.collect_list(F.col("dst").cast(dst_t)).alias("dst_list")]
+    sink_cols = [
+        F.col("src"),
+        F.lit(0).cast("int").alias("salt"),
+        F.array(F.col("dst").cast(dst_t)).alias("dst_list"),
     ]
     if not uniform:
-        aggs.insert(
-            1, F.collect_list(F.col("w_norm").cast(w_t)).alias("w_list")
-        )
-    grouped = e.groupBy("src", "salt").agg(*aggs)
-    if dangling_sink:
-        sink_cols = [
-            F.col("src"),
-            F.lit(0).cast("int").alias("salt"),
-            F.array(F.lit(-1).cast(dst_t)).alias("dst_list"),
-            F.lit(0).cast("long").alias("degree"),
-            F.lit(0.0).alias("w_out"),
-        ]
-        if not uniform:
-            sink_cols.insert(
-                3, F.array(F.lit(1.0).cast(w_t)).alias("w_list")
-            )
-        sink_rows = (
-            g.vertices.select(F.col("id").alias("src"))
-            .join(wout.select("src"), "src", "left_anti")
-            .select(*sink_cols)
-        )
-        grouped = grouped.unionByName(sink_rows)
+        aggs.append(F.collect_list(F.col("w_norm").cast(w_t)).alias("w_list"))
+        sink_cols.append(F.array(F.col("w_norm").cast(w_t)).alias("w_list"))
+    aggs.append(F.first("degree").alias("degree"))
+    sink_cols.append(F.lit(0).cast("long").alias("degree"))
     shards = (
-        grouped.withColumn("bucket", F.pmod(F.hash("src"), F.lit(n_buckets)))
-        .repartition(n_buckets, "src", "salt")
+        e.groupBy("src", "salt")
+        .agg(*aggs)
+        .unionByName(_sink_edges(g, wout).select(*sink_cols))
+        .repartition(
+            int(spark.conf.get("spark.sql.shuffle.partitions")), "src", "salt"
+        )
         .cache()
     )
     salt_map = (
@@ -263,6 +261,5 @@ def build_adj_shards(
         salt_map=salt_map,
         wout=wout,
         salt_cap=salt_cap,
-        dangling_sink=dangling_sink,
-        uniform=bool(uniform),
+        uniform=uniform,
     )

@@ -10,6 +10,26 @@ import os
 
 from pyspark.sql import SparkSession
 
+_CGROUP_LIMITS = (
+    "/sys/fs/cgroup/memory.max",  # cgroup v2
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",  # cgroup v1
+)
+
+
+def default_driver_memory(cpus: int) -> str:
+    """Half of what physical memory (or the cgroup limit, if lower) leaves
+    after 512 MiB per Python worker, at least 1 GiB.  The other half covers
+    the JVM's off-heap memory and the OS: with no swap, a heap sized to the
+    whole machine gets the process killed instead of garbage-collected."""
+    mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    for path in _CGROUP_LIMITS:
+        try:
+            with open(path) as f:
+                mb = min(mb, int(f.read()) // 2**20)
+        except (OSError, ValueError):  # no such cgroup, or "max" (no limit)
+            pass
+    return f"{max(1024, (mb - 512 * cpus) // 2)}m"
+
 
 def get_spark(
     app_name: str = "graphina_spark",
@@ -24,6 +44,8 @@ def get_spark(
     - Arrow on (all html/text UDFs are vectorized pandas UDFs)
     - UTC timezone (oracle comparisons against DuckDB's UTC-naive timestamps)
     - shuffle partitions sized to cores, not the 200 default
+    - driver heap sized to the machine (:func:`default_driver_memory`;
+      ``SPARK_GRAFT_DRIVER_MEM`` overrides) and no console progress bars
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
@@ -48,7 +70,11 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.ui.showConsoleProgress", "false")
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(cpus),
+        )
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

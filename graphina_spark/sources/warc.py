@@ -110,16 +110,14 @@ def _parse_blob(blob: bytes) -> Iterator[tuple[str, str, str, bytes]]:
             if ":" in line:
                 k, v = line.split(":", 1)
                 headers[k.strip().lower()] = v.strip()
-        try:
-            length = int(headers.get("content-length", "0"))
-        except ValueError:
-            length = -1
-        if length < 0:
-            # malformed/crafted Content-Length: skip this header block and
-            # rescan.  Without the guard a negative length moved the cursor
-            # BACKWARD (i = hdr_end + 4 + length), re-finding the same
-            # version line forever — an executor hang + unbounded yields on
-            # one crafted record.  Both branches strictly advance i past j.
+        raw = headers.get("content-length", "0")
+        length = int(raw) if raw.isascii() and raw.isdigit() else -1
+        if not 0 <= length <= n - (hdr_end + 4):
+            # malformed/crafted Content-Length (not plain ASCII digits, or
+            # longer than the bytes left): skip this header block and
+            # rescan.  A negative length once moved the cursor BACKWARD
+            # (an executor hang), an oversize one swallowed every later
+            # record of the segment.  Both branches strictly advance i.
             i = hdr_end + 4
             continue
         payload = blob[hdr_end + 4 : hdr_end + 4 + length]

@@ -41,7 +41,6 @@ def main() -> None:
     ap.add_argument("--tol", type=float, default=1e-6)
     ap.add_argument("--undirected", action="store_true")
     ap.add_argument("--salt-cap", type=int, default=100_000)
-    ap.add_argument("--no-shards", action="store_true", help="plain per-edge join path")
     ap.add_argument(
         "--compact", action="store_true",
         help="int32/float32 shard arrays (ids < 2^31; rank error "
@@ -75,24 +74,30 @@ def main() -> None:
 
     ckpt = None
     if a.checkpoint_dir:
+        # every input and kernel option that changes the rank vector: a
+        # --resume under the same --run-id with any of them changed must
+        # start over, not continue the old run's ranks
         ckpt = CheckpointManager(
             base=a.checkpoint_dir,
             run_id=a.run_id,
             params={
                 "alg": "pagerank",
+                "input": {
+                    "pages_parquet": a.pages_parquet,
+                    "edges_parquet": a.edges_parquet,
+                    "synth_pages": a.synth_pages,
+                },
                 "damping": a.damping,
                 "tol": a.tol,
                 "max_iter": a.max_iter,
                 "undirected": a.undirected,
+                "salt_cap": a.salt_cap,
+                "compact": a.compact,
             },
         )
 
-    adj = (
-        None
-        if a.no_shards
-        else build_adj_shards(g, salt_cap=a.salt_cap, dangling_sink=True,
-                              compact=a.compact)
-    )
+    # below SHARDS_MIN_EDGES pagerank() takes the plain per-edge join
+    adj = build_adj_shards(g, salt_cap=a.salt_cap, compact=a.compact)
     t0 = time.time()
     pr = pagerank(
         g,

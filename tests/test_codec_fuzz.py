@@ -129,6 +129,17 @@ def test_byteflip_never_leaks_raw_errors(fmt, pos, val):
         pass
 
 
+def test_gif_oversized_lzw_code_size_rejected():
+    # pinned byte-flip example (fmt='gif', pos=1553, val=43): offset 35 is
+    # the LZW minimum code size (2 in the fixture); 43 once asked the
+    # decoder for a 2^43-entry code table and OOM-killed the process
+    blob = bytearray(STREAMS["gif"])
+    assert blob[35] == 2
+    blob[35] = 43
+    with pytest.raises(ValueError, match="minimum code size"):
+        decode_image(bytes(blob))
+
+
 @settings(max_examples=150, deadline=None)
 @given(pos=st.integers(0, 4000), val=st.integers(0, 255))
 def test_wav_byteflip_contract(pos, val):

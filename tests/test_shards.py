@@ -1,13 +1,16 @@
 """Salted CSR adjacency shards: structure invariants + PageRank equivalence
-between the per-edge join path and the sharded gather path."""
+between the per-edge join path and the sharded gather path, in every
+superstep mode, with and without dangling vertices."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from graphina_spark.operators.pagerank import pagerank
+from graphina_spark.plans.checkpoint import CheckpointManager
 from graphina_spark.plans.shards import build_adj_shards
 from graphina_spark.sources.derived import web_graph
 from tests.conftest import make_graph
+from tests.reference_impl import ref_pagerank
 
 
 def _pr_map(df):
@@ -26,9 +29,10 @@ def test_shard_rows_capped_and_complete(spark, sf_dir):
     # cap respected
     assert all(len(r["dst_list"]) <= 5 for r in rows)
     assert all(len(r["dst_list"]) == len(r["w_list"]) for r in rows)
-    # every symmetrized edge present exactly once across salt rows
+    # every symmetrized edge present exactly once across salt rows; the
+    # one-entry sink rows (degree 0) are not edges
     n_edges = g.symmetric_edges().count()
-    assert sum(len(r["dst_list"]) for r in rows) == n_edges
+    assert sum(len(r["dst_list"]) for r in rows if r["degree"] > 0) == n_edges
     # hubs split across multiple salts; salt_map covers exactly the split srcs
     split = {r["src"] for r in rows if r["salt"] > 0}
     hubs = {r["src"] for r in adj.salt_map.collect()}
@@ -59,7 +63,7 @@ def test_shards_auto_select_falls_back_below_threshold(spark, sf_dir):
     # silently takes the plain per-edge join and values are identical to
     # the forced shard kernel (both paths are value-gated)
     g = web_graph(spark, sf_dir)
-    adj = build_adj_shards(g, dangling_sink=True)
+    adj = build_adj_shards(g)
     auto = _pr_map(pagerank(g, fixed_iters=5, tol=None, shards=adj))
     forced = _pr_map(
         pagerank(g, fixed_iters=5, tol=None, shards=adj, shards_min_edges=0)
@@ -94,34 +98,62 @@ def test_convergence_with_shards(spark, sf_dir):
     adj.unpersist()
 
 
-def test_dangling_sink_shards_match_plain_and_semi_join(spark):
+GRAPHS = {
     # 3 and 4 are dangling (no out-edges); 2→3, 0→4 feed them rank mass
-    g = make_graph(spark, [(0, 1), (1, 2), (2, 0), (2, 3), (0, 4)], n=5)
-    plain = _pr_map(pagerank(g, fixed_iters=10, tol=None))
-    sink = build_adj_shards(g, salt_cap=2, dangling_sink=True)
-    nosink = build_adj_shards(g, salt_cap=2, dangling_sink=False)
-    pr_sink = _pr_map(pagerank(g, fixed_iters=10, tol=None, shards=sink, shards_min_edges=0))
-    pr_nosink = _pr_map(pagerank(g, fixed_iters=10, tol=None, shards=nosink, shards_min_edges=0))
-    # sink id -1 never leaks into results
-    assert set(pr_sink) == set(plain) and -1 not in pr_sink
-    assert all(abs(plain[k] - pr_sink[k]) < 1e-12 for k in plain)
-    assert all(abs(plain[k] - pr_nosink[k]) < 1e-12 for k in plain)
-    assert abs(sum(pr_sink.values()) - 1.0) < 1e-9
-    # sink shard rows exist exactly for the dangling vertices
-    sink_rows = sink.shards.where(F.col("w_out") == 0.0).collect()
-    assert {r["src"] for r in sink_rows} == {3, 4}
-    assert all(list(r["dst_list"]) == [-1] for r in sink_rows)
-    # wout carries no sink rows (vinfo dangling flags derive from absence)
-    assert sink.wout.where(F.col("src").isin(3, 4)).count() == 0
-    sink.unpersist()
-    nosink.unpersist()
+    "dangling": ([(0, 1), (1, 2), (2, 0), (2, 3), (0, 4)], 5),
+    "no_dangling": ([(0, 1), (1, 2), (2, 0), (2, 1), (3, 0), (0, 3)], 4),
+}
+MODES = {
+    "one_job": dict(fixed_iters=10, tol=None),
+    "checkpointed": dict(fixed_iters=10, tol=None),
+    "tol": dict(tol=1e-6, max_iter=300),
+}
+
+
+@pytest.mark.parametrize("graph", sorted(GRAPHS))
+@pytest.mark.parametrize("mode", sorted(MODES))
+@pytest.mark.parametrize("kernel", ["plain", "shards"])
+def test_dangling_mass_every_kernel_and_mode(spark, tmp_path, kernel, mode, graph):
+    edges, n = GRAPHS[graph]
+    g = make_graph(spark, edges, n=n)
+    kw = dict(MODES[mode])
+    if mode == "checkpointed":
+        kw["checkpoint"] = CheckpointManager(base=str(tmp_path), run_id="r")
+    adj = None
+    if kernel == "shards":
+        adj = build_adj_shards(g, salt_cap=1)  # every hub split
+        kw.update(shards=adj, shards_min_edges=0)
+    got = _pr_map(pagerank(g, **kw))
+    exp = ref_pagerank(
+        n, edges, fixed_iters=kw.get("fixed_iters"), tol=kw.get("tol"),
+        max_iter=kw.get("max_iter", 100),
+    )
+    # the sink id -1 never leaks into results
+    assert set(got) == set(range(n))
+    assert all(abs(got[i] - e) < 1e-9 for i, e in enumerate(exp))
+    assert abs(sum(got.values()) - 1.0) < 1e-9
+    if adj is not None:
+        # sink shard rows exist exactly for the dangling vertices, and wout
+        # (what pagerank counts against n) carries none of them
+        sink_rows = adj.shards.where(F.col("degree") == 0).collect()
+        dangling = set(range(n)) - {u for u, _ in edges}
+        assert {r["src"] for r in sink_rows} == dangling
+        assert all(list(r["dst_list"]) == [-1] for r in sink_rows)
+        assert adj.wout.count() == n - len(dangling)
+        adj.unpersist()
+
+
+def test_dangling_sink_false_rejected(spark):
+    g = make_graph(spark, [(0, 1)], n=2, directed=True)
+    with pytest.raises(ValueError, match="dangling_sink"):
+        build_adj_shards(g, dangling_sink=False)
 
 
 def test_compact_shards_match_f64_within_contract(spark, sf_dir):
     # int32 dst / float32 w_norm layout: ids exact, ranks within the north
     # rule's allclose 1e-6 of the float64 kernel (error bound 2^-23/(1-d))
     g = web_graph(spark, sf_dir)
-    cp = build_adj_shards(g, salt_cap=3, dangling_sink=True, compact=True)
+    cp = build_adj_shards(g, salt_cap=3, compact=True)
     assert dict(cp.shards.dtypes)["dst_list"] == "array<int>"
     assert dict(cp.shards.dtypes)["w_list"] == "array<float>"
     plain = _pr_map(pagerank(g, fixed_iters=10, tol=None))
@@ -164,7 +196,7 @@ def test_uniform_shards_auto_detect_and_match_plain(spark, sf_dir):
         edges=g.edges.select("src", "dst", F.lit(1.0).alias("weight")),
         directed=True,
     )
-    adj = build_adj_shards(gu, dangling_sink=True, compact=True)
+    adj = build_adj_shards(gu, compact=True)
     assert adj.uniform is True
     assert "w_list" not in adj.shards.columns
     plain = _pr_map(pagerank(gu, fixed_iters=5, tol=None))
@@ -178,12 +210,6 @@ def test_uniform_shards_auto_detect_and_match_plain(spark, sf_dir):
 
 def test_uniform_shards_not_detected_on_weighted(spark, sf_dir):
     g = web_graph(spark, sf_dir)  # weights 1..5
-    adj = build_adj_shards(g, dangling_sink=True)
+    adj = build_adj_shards(g)
     assert adj.uniform is False and "w_list" in adj.shards.columns
     adj.unpersist()
-
-
-def test_uniform_requires_normalize(spark):
-    g = make_graph(spark, [(0, 1)], n=2, directed=True)
-    with pytest.raises(ValueError, match="normalize"):
-        build_adj_shards(g, normalize=False, uniform=True)

@@ -9,6 +9,7 @@ malformed side.
 """
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -52,6 +53,21 @@ def test_non_numeric_content_length_skipped():
     assert [(r[1], r[3]) for r in recs] == [("doc://2", b"ok")]
 
 
+@pytest.mark.parametrize("length", ["+5", "\u0665", "1_0"])
+def test_content_length_must_be_ascii_digits(length):
+    # int() accepts a sign, non-ASCII digits and underscores; WARC does not
+    blob = _record("doc://evil", b"hello", length=length) + _record("doc://2", b"ok")
+    recs = list(_parse_blob(blob))
+    assert [(r[1], r[3]) for r in recs] == [("doc://2", b"ok")]
+
+
+def test_oversize_content_length_rescans_to_next_record():
+    # a length past the end of the blob once swallowed every later record
+    blob = _record("doc://evil", b"x", length="9999") + _record("doc://2", b"ok")
+    recs = list(_parse_blob(blob))
+    assert [(r[1], r[3]) for r in recs] == [("doc://2", b"ok")]
+
+
 def test_non_utf8_header_bytes_do_not_raise():
     blob = _record("doc://caf\xe9".encode("latin-1").decode("latin-1"), b"ok")
     # splice raw latin-1 bytes into the URI header line
@@ -60,11 +76,10 @@ def test_non_utf8_header_bytes_do_not_raise():
     assert len(recs) == 1 and recs[0][3] == b"ok"
 
 
-def test_truncated_payload_clamps_and_terminates():
+def test_truncated_payload_skipped_and_terminates():
+    # the Content-Length claims more bytes than are left: no record
     blob = _record("doc://1", b"hello")[:-9]  # cut into the payload
-    recs = list(_parse_blob(blob))
-    assert len(recs) == 1
-    assert recs[0][3] == b"hell"[: len(recs[0][3])] or len(recs[0][3]) <= 5
+    assert list(_parse_blob(blob)) == []
 
 
 @settings(max_examples=200, deadline=None)
